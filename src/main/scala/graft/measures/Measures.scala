@@ -27,6 +27,10 @@ import org.apache.spark.sql.functions._
   * evaluation costs a single O(n log n) sort per window — this is what makes
   * the plan scale: per-key windows shard by key, and each window's work is
   * bounded by its frame, never by the table.
+  *
+  * These are building blocks: `AlertPipeline.withMeasures` is the one place
+  * that assembles them into the batch measure table (the streaming operator
+  * evaluates the same formulas through `MeasuresRef.allFast`).
   */
 object Measures {
   val Mean = "mean"
@@ -53,35 +57,23 @@ object Measures {
     aggregate(slice(xs, 1, k), lit(0.0), (acc, x) => acc + x) / k
   }
 
-  def sm1(xs: Column, n: Int): Column = sm1From(mean(xs, n), xs, n)
-
   /** sm1 with the window mean supplied as a (pre-materialized) column —
     * inlining `mean(xs)` into the per-element lambda would re-evaluate the
-    * whole fold for every element (O(n²) per window); callers that cache the
-    * mean alongside `xs` keep it O(n). */
+    * whole fold for every element (O(n²) per window), so the only caller,
+    * `AlertPipeline.withMeasures`, projects the mean first. */
   def sm1From(m: Column, xs: Column, n: Int): Column =
     m - aggregate(transform(xs, x => abs(m - x)), lit(0.0), (a, x) => a + x) /
       (2.0 * n)
 
   /** Gini-mean-difference risk measure; `gsum = Σᵢ(2i−n−1)sᵢ` equals half the
-    * full ordered-pair sum, so the reference's `pairSum/(2n²)` is `gsum/n²`. */
-  def sm2(xs: Column, n: Int): Column = sm2From(mean(xs, n), xs, n)
-
+    * full ordered-pair sum, so the reference's `pairSum/(2n²)` is `gsum/n²`.
+    * Takes the window mean as a column for the same reason as [[sm1From]]. */
   def sm2From(m: Column, xs: Column, n: Int): Column = {
     val gsum = aggregate(
       transform(xs, (x, i) => (lit(2) * (i + lit(1)) - lit(n + 1)).cast("double") * x),
       lit(0.0), (a, x) => a + x)
     m - gsum / (n.toDouble * n)
   }
-
-  /** All six measures in reference order, for a sorted window array. */
-  def all(xs: Column, n: Int): Seq[(String, Column)] = Seq(
-    Mean -> mean(xs, n),
-    Median -> median(xs, n),
-    Q10 -> q10(xs, n),
-    TailMean -> tailMean(xs, n),
-    Sm1 -> sm1(xs, n),
-    Sm2 -> sm2(xs, n))
 
   /** Reference alert predicate (StreamingJob.java:369-386): alert iff the
     * window measure `m` falls below threshold `thr` by at least a 1% relative

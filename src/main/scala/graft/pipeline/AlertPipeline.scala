@@ -39,6 +39,10 @@ object AlertPipeline {
       .where(col("rn") >= n)
   }
 
+  /** The measure columns [[withMeasures]] emits, in `Measures.names` order. */
+  val measureCols: Seq[String] =
+    Seq("m_mean", "m_median", "m_q10", "m_tail", "m_sm1", "m_sm2")
+
   /** Wide per-window measure table from a [[windowed]] result: key cols +
     * one column per measure. The window mean is aliased in its own
     * projection before sm1/sm2 consume it — inlined into their
@@ -47,30 +51,33 @@ object AlertPipeline {
     * refuses to inline a non-cheap alias referenced more than once, so
     * the mean stays a materialized column (plan-audited); a cache here
     * would pin the full window table in executor storage for the session
-    * lifetime, unreachable by Caches.evict. */
+    * lifetime, unreachable by Caches.evict.
+    *
+    * This is the one assembler of the batch measures: every batch consumer
+    * (the alert pipelines, the window queries) reads this table. */
   def withMeasures(windowedDf: DataFrame, keys: Seq[Column],
       n: Int = WindowSize): DataFrame = {
+    val xs = col("xs")
+    val mean = col(measureCols.head)
     val base = windowedDf
-      .select(keys :+ col("xs"): _*)
-      .withColumn("m_mean", Measures.mean(col("xs"), n))
-    base.select(keys ++ Seq(
-      col("m_mean"),
-      Measures.median(col("xs"), n).as("m_median"),
-      Measures.q10(col("xs"), n).as("m_q10"),
-      Measures.tailMean(col("xs"), n).as("m_tail"),
-      Measures.sm1From(col("m_mean"), col("xs"), n).as("m_sm1"),
-      Measures.sm2From(col("m_mean"), col("xs"), n).as("m_sm2")): _*)
+      .select(keys :+ xs: _*)
+      .withColumn(measureCols.head, Measures.mean(xs, n))
+    val rest = Seq(
+      Measures.median(xs, n),
+      Measures.q10(xs, n),
+      Measures.tailMean(xs, n),
+      Measures.sm1From(mean, xs, n),
+      Measures.sm2From(mean, xs, n))
+    base.select(keys ++ (mean +: rest.zip(measureCols.tail).map {
+      case (m, name) => m.as(name) }): _*)
   }
 
-  /** Unpivots the wide measure table to (…, stat, m) — O12's shape. */
+  /** Unpivots the wide measure table to (…, stat, m) — O12's shape:
+    * `stack(6, '<stat>', m_<stat>, …) AS (stat, m)`, pairing each of
+    * `Measures.names` with its [[measureCols]] entry. */
   val unpivotMeasures: String =
-    """stack(6,
-      |  'mean', m_mean,
-      |  'median', m_median,
-      |  '10th quantile', m_q10,
-      |  'mean of 10% smallest', m_tail,
-      |  'security measure 1', m_sm1,
-      |  'security measure 2', m_sm2) AS (stat, m)""".stripMargin
+    Measures.names.zip(measureCols).map { case (stat, c) => s"'$stat', $c" }
+      .mkString(s"stack(${measureCols.length}, ", ", ", ") AS (stat, m)")
 
   /** Population thresholds over a single value column `v` — the analog of
     * psd.R:26-70 / stats.csv: mean, exact median & 10th percentile

@@ -796,7 +796,9 @@ object StreamingQueries {
     // static index, so the streamed union is batch-split-invariant
     // (StreamingContainmentSpec pins it); the per-probe window the probe
     // stage needs runs inside foreachBatch (the rich-stateless recipe),
-    // landing exactly-once via idempotent per-batchId overwrite dirs.
+    // landing exactly-once via a batchId-keyed map of checkpointed hit
+    // frames (a replayed batch supersedes its own entry); the map is
+    // in-memory, so each run gets a fresh temp workDir.
     // Oracle = q209's batch oracle VERBATIM: one ground truth, batch and
     // streamed route.
     Q("q211_streaming_containment_decontam",

@@ -25,10 +25,11 @@ import graft.dedup.Dedup
   * probe's grams), which Structured Streaming's incremental planner
   * rejects — but the computation is per-probe STATELESS, so foreachBatch
   * runs the full batch operator on each micro-batch: the standard recipe
-  * for rich stateless transforms. Exactly-once lands via the
-  * batchId-keyed frame map (a replayed batch supersedes its own entry
+  * for rich stateless transforms. Exactly-once within a run lands via
+  * the batchId-keyed frame map (a replayed batch supersedes its own entry
   * with identical content); the result unions the frames in batch
-  * order. */
+  * order. The map is in-memory, so a run never resumes an earlier run's
+  * checkpoint: see [[run]]'s `workDir`. */
 object StreamingContainment {
 
   /** Run `probeStream` (any per-row schema `mkGrams` can shingle) to
@@ -36,12 +37,22 @@ object StreamingContainment {
     * `index`; returns all hits (probeIdCol, corpusIdCol, common,
     * containment). `mkGrams` turns a batch into the (probeIdCol, grams)
     * frame — shingling is per-document, so batch shingling matches the
-    * batch operator's exactly. */
+    * batch operator's exactly.
+    *
+    * `workDir` must be fresh for each run: the hit frames live only in
+    * this call's memory, so resuming from an earlier run's checkpoint
+    * would skip its committed batches and silently drop their hits. A
+    * `workDir` whose `_ckpt` already exists is rejected. */
   def run(probeStream: DataFrame, index: Dedup.ContainmentIndex,
       num: Int, den: Int, workDir: String,
       mkGrams: DataFrame => DataFrame,
       probeIdCol: String = "probe_id"): DataFrame = {
     val spark = probeStream.sparkSession
+    val ckpt = new org.apache.hadoop.fs.Path(s"$workDir/_ckpt")
+    require(!ckpt.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .exists(ckpt),
+      s"$ckpt already exists: its committed batches' hits are gone with " +
+        "the run that made them; pass a fresh workDir")
     // per-batch hit frames accumulate as checkpointed blocks keyed by
     // batchId — a replayed batch SUPERSEDES its earlier frame, the same
     // idempotence the r18 per-batchId parquet overwrite dirs provided,
@@ -77,7 +88,7 @@ object StreamingContainment {
           results(batchId) = hits
         } finally graft.analytics.Graphs.freeLocalCheckpoint(g)
       }
-      .option("checkpointLocation", s"$workDir/_ckpt")
+      .option("checkpointLocation", ckpt.toString)
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()

@@ -4,18 +4,19 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
+import graft.pipeline.AlertPipeline
 
 class MeasuresSpec extends AnyFunSuite with SparkTestBase {
 
   private val N = 30
 
-  /** Evaluate all six engine column expressions over one window array. */
+  /** Evaluate all six engine measures through the batch assembler
+    * (`AlertPipeline.withMeasures`) over a frame holding one window. */
   private def engineAll(xs: Array[Double]): Seq[(String, Double)] = {
     import spark.implicits._
-    val df = Seq(Tuple1(xs.sorted.toSeq)).toDF("xs")
-      .select(Measures.all(col("xs"), N).map { case (n, c) => c.as(n) }: _*)
-    val row = df.head()
-    Measures.names.zipWithIndex.map { case (n, i) => n -> row.getDouble(i) }
+    val window = Seq((0L, xs.sorted.toSeq)).toDF("key", "xs")
+    val row = AlertPipeline.withMeasures(window, Seq(col("key")), N).head()
+    Measures.names.zipWithIndex.map { case (n, i) => n -> row.getDouble(i + 1) }
   }
 
   test("hand-computed fixture: 30 ascending integers") {

@@ -144,4 +144,28 @@ class CachesSpec extends AnyFunSuite with SparkTestBase {
     Caches.evict(s)
     assert(cleans.get() === 1, "only the successful rebuild is cleaned")
   }
+
+  test("q33's median, q10, tail, SM1 and SM2 columns are q05–q09's, bit " +
+      "for bit: one shared per-window measure table") {
+    // q04 is left out: its built-in sliding avg folds in event order, the
+    // measure table's mean in sorted order
+    val s = spark.newSession()
+    def rows(name: String) =
+      WindowQueries.all.find(_.name == name).get.run(s, dir).collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> r).toMap
+    val q33 = rows("q33_window_onepass_udaf")
+    assert(q33.nonEmpty)
+    Seq("q05_window_median", "q06_window_q10", "q07_window_tailmean",
+        "q08_window_sm1", "q09_window_sm2").zipWithIndex.foreach {
+      case (q, i) =>
+        val single = rows(q)
+        assert(single.keySet === q33.keySet, s"$q windows differ from q33's")
+        single.foreach { case (k, r) =>
+          val (got, want) = (r.getDouble(2), q33(k).getDouble(3 + i))
+          assert(java.lang.Double.doubleToLongBits(got) ===
+            java.lang.Double.doubleToLongBits(want), s"$q at $k: $got vs $want")
+        }
+    }
+    Caches.evict(s)
+  }
 }

@@ -77,4 +77,36 @@ class StreamingContainmentSpec extends AnyFunSuite with SparkTestBase {
       Seq("probe_id", "doc_id", "common", "containment"))
     assert(got.count() === 0L)
   }
+
+  test("a second run over the same workDir fails loudly instead of " +
+      "resuming past batches whose hits died with the first run; a " +
+      "fresh workDir still equals the batch result") {
+    import spark.implicits._
+    val dir =
+      java.nio.file.Files.createTempDirectory("graft_scont_r").toString
+    val corpus = Seq((100L, "the quick brown fox jumps over the lazy " +
+      "dog near the old river bank today")).toDF("doc_id", "text")
+    val probes = Seq((1L, "quick brown fox jumps over the lazy dog"),
+      (2L, "entirely unrelated words about cooking pasta tonight"))
+    probes.toDF("doc_id", "text").repartition(2)
+      .write.mode("overwrite").parquet(s"$dir/probe")
+    val corpusGrams = Dedup.shingles(corpus)
+    val idx = Dedup.containmentIndex(corpusGrams)
+    val mkGrams = (b: org.apache.spark.sql.DataFrame) => Dedup.shingles(b)
+      .select(col("doc_id").as("probe_id"), col("grams"))
+    def run(work: String) = StreamingContainment.run(
+        spark.readStream.schema("doc_id BIGINT, text STRING")
+          .option("maxFilesPerTrigger", "1").parquet(s"$dir/probe"),
+        idx, num = 1, den = 2, s"$dir/$work", mkGrams)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    val expected = Dedup.containmentAcross(
+        mkGrams(probes.toDF("doc_id", "text")), corpusGrams, num = 1, den = 2)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    assert(expected.nonEmpty, "test fixture should produce hits")
+
+    assert(run("work") === expected)
+    val e = intercept[IllegalArgumentException](run("work"))
+    assert(e.getMessage.contains("_ckpt"))
+    assert(run("work_fresh") === expected)
+  }
 }
